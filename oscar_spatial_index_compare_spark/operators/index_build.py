@@ -3,13 +3,15 @@
 Reference: ``OscarSgIndex::create`` (``src/OscarSgIndex.cpp:53-207``) scans
 cell→items→points with a thread pool, an atomic work counter and
 mutex-guarded shared maps, then sort+uniques posting lists.  All of that
-machinery is replaced by one declarative pipeline:
+machinery is replaced by one declarative pipeline, driven by ``Engine``
+through the catalog:
 
-    mentions → (cell_id per grid/res) → groupBy → sorted doc-id postings
+    documents → doc_index_full (one narrow pass) → stored index_base
+      → mention_cells_from_full ∥ cell_totals_from_base ∥ token postings
 
 Scale notes (the part that must survive 100 TB):
-  * ``mention_cells`` is the big fact table — written partitioned by
-    ``(grid, res)`` and bucketed/sorted by ``cell_id`` so region-query joins
+  * ``mention_cells`` is the big fact table — the engine writes it
+    hash-clustered and sorted by ``cell_id`` so region-query joins
     co-locate and parquet min-max stats prune by cell range (S2 ids make
     descendant ranges contiguous).
   * the postings groupBy is the one unavoidable shuffle; map-side partial
@@ -21,6 +23,9 @@ Scale notes (the part that must survive 100 TB):
   * posting lists are ``array_sort(collect_list(doc_id))`` — the RLE-delta
     compressed ItemIndex analog (``apps/main.cpp:153``); parquet dictionary/
     RLE encodings replace hand-rolled compression (SURVEY B7).
+
+The row-wise ``mention_cells`` and ``cell_postings`` serve streaming ingest
+and the region-id (gh-HCQR) pieces, which start from exploded mentions.
 """
 
 from __future__ import annotations
@@ -61,7 +66,7 @@ def doc_index_full(docs: DataFrame, grid: str, res: int) -> DataFrame:
     numpy call over the whole array for s2/hex/htm), and carry the distinct
     token set.  ``cells_m`` is per-mention (zip-aligned with names/lats/
     lons); ``cells`` is the distinct set.  EVERY index table derives from
-    this one cached frame: cell_totals / token_postings each need exactly
+    this one stored frame: cell_totals / token_postings each need exactly
     ONE wide operation, and mention_cells is a plain arrays_zip explode —
     the gazetteer match runs ONCE per corpus pass (r01 ran it separately for
     mentions and postings).
@@ -95,12 +100,6 @@ def doc_index_full_from_full(full: DataFrame, grid: str, res: int) -> DataFrame:
     return p3.withColumn(
         "cells_m", cells_arr_col(grid, F.col("lats"), F.col("lons"), res)
     ).withColumn("cells", F.array_distinct(F.col("cells_m")))
-
-
-def doc_index_base(docs: DataFrame, grid: str, res: int) -> DataFrame:
-    """(doc_id, toks, cells) projection of doc_index_full — kept as the
-    minimal input contract of cell_totals_from_base / token_postings_from_base."""
-    return doc_index_full(docs, grid, res).select("doc_id", "toks", "cells")
 
 
 def mention_cells_from_full(full: DataFrame, grid: str, res: int) -> DataFrame:
@@ -188,15 +187,6 @@ def cell_totals_from_base(base: DataFrame, grid: str, res: int,
     )
 
 
-def mention_cells_from_docs(docs: DataFrame, grid: str, res: int) -> DataFrame:
-    """mention_cells computed ARRAY-WISE from documents: matched gazetteer
-    entries, jitter and cells stay per-doc arrays (one Arrow/codegen row per
-    DOC — ~34x fewer rows through the cell UDF than the exploded form),
-    then a single arrays_zip explode.  Row-identical to
-    ``mention_cells(extract_mentions(docs), grid, res)``."""
-    return mention_cells_from_full(doc_index_full(docs, grid, res), grid, res)
-
-
 def mention_cells(mentions: DataFrame, grid: str, res: int) -> DataFrame:
     """mentions → (grid, res, doc_id, name, lat, lon, cell_id)."""
     return mentions.select(
@@ -204,32 +194,6 @@ def mention_cells(mentions: DataFrame, grid: str, res: int) -> DataFrame:
         F.lit(res).alias("res"),
         "doc_id", "name", "lat", "lon",
         cell_col(grid, F.col("lat"), F.col("lon"), res).alias("cell_id"),
-    )
-
-
-def doc_cells(mcells: DataFrame) -> DataFrame:
-    """Distinct (grid, res, doc_id, cell_id) — the TrixelData triple stream
-    (reference emits (trixel, cell, item) at ``src/OscarSgIndex.cpp:113-128``)."""
-    return mcells.select("grid", "res", "doc_id", "cell_id").dropDuplicates(
-        ["grid", "res", "doc_id", "cell_id"]
-    )
-
-
-def cell_totals(dcells: DataFrame,
-                hot_threshold: int = HOT_CELL_THRESHOLD) -> DataFrame:
-    """B3 ``computeTrixelItems`` analog: per cell, the full sorted doc set.
-
-    Conditional two-phase aggregation (see _doc_sets_by_cell): only cells
-    above ``hot_threshold`` take the explicit salted route; normal cells get
-    one map-side-combined groupBy."""
-    sets = _doc_sets_by_cell(dcells, ["grid", "res", "cell_id"], hot_threshold)
-    return sets.withColumn("n_docs", F.size("doc_ids").cast("long"))
-
-
-def cell_counts(dcells: DataFrame) -> DataFrame:
-    """Cheap statistics variant (A1): per-cell doc counts without the arrays."""
-    return dcells.groupBy("grid", "res", "cell_id").agg(
-        F.count("*").cast("long").alias("n_docs")
     )
 
 
@@ -258,11 +222,6 @@ def region_mention_cells(mcells: DataFrame) -> DataFrame:
     return out.dropDuplicates(["grid", "res", "region_id", "doc_id", "cell_id"])
 
 
-def region_docs(mcells: DataFrame) -> DataFrame:
-    """(region_id, doc_id) membership via exact PIP over mention coords."""
-    return region_mention_cells(mcells).select("region_id", "doc_id").dropDuplicates()
-
-
 def cell_postings(mcells: DataFrame) -> DataFrame:
     """B1 TrixelData analog: (grid, res, cell_id, region_id, doc_ids, n_docs)
     from inside-region mention cells."""
@@ -271,27 +230,4 @@ def cell_postings(mcells: DataFrame) -> DataFrame:
         .groupBy("grid", "res", "cell_id", "region_id")
         .agg(F.array_sort(F.collect_set("doc_id")).alias("doc_ids"))
         .withColumn("n_docs", F.size("doc_ids").cast("long"))
-    )
-
-
-def region_cells(cpostings: DataFrame) -> DataFrame:
-    """CellTrixelMap analog (``src/OscarSgIndex.cpp:148-156``)."""
-    return cpostings.select("grid", "res", "region_id", "cell_id").dropDuplicates()
-
-
-def index_stats(dcells: DataFrame, grid_name: str) -> DataFrame:
-    """A1/A2: per-res distribution of per-cell doc counts + cell areas."""
-    from ..functions.udfs import area_udf
-
-    per_cell = dcells.groupBy("grid", "res", "cell_id").agg(
-        F.count("*").alias("n_docs")
-    )
-    per_cell = per_cell.withColumn("area_km2", area_udf(grid_name)(F.col("cell_id")))
-    return per_cell.groupBy("grid", "res").agg(
-        F.count("*").cast("long").alias("n_cells"),
-        F.min("n_docs").cast("long").alias("min_docs"),
-        F.max("n_docs").cast("long").alias("max_docs"),
-        F.sum("n_docs").cast("long").alias("sum_docs"),
-        F.min("area_km2").alias("min_area_km2"),
-        F.max("area_km2").alias("max_area_km2"),
     )

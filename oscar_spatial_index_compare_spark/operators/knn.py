@@ -277,7 +277,7 @@ def knn_docs(
         counts, mstar, ndocs = _cell_doc_counts(probe, mcells, key)
     finally:
         if warm_pool is not None:
-            warm_pool.shutdown(wait=False)
+            warm_pool.shutdown(wait=False, cancel_futures=True)
     if counts is None:
         # populated-cell list too large for the driver (very deep res at
         # 100 TB): planar ring expansion with the conservative km bound

@@ -141,8 +141,8 @@ def _pop_row_bound(key: tuple, cells: np.ndarray) -> int | None:
     entry = _POP_CACHE.get(key)
     if entry is None or entry[1] is None or entry[2] is None:
         return None
-    if not len(cells):
-        return 0
+    if not len(cells) or not len(entry[1]):
+        return 0  # no cells asked for, or none populated at this (grid, res)
     idx = np.searchsorted(entry[1], cells)
     idx = np.clip(idx, 0, len(entry[1]) - 1)
     hit = entry[1][idx] == cells

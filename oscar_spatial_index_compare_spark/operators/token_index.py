@@ -6,11 +6,14 @@ matched items with per-trixel postings (two-pointer merge,
 vs partial-match by comparing matched-count to the trixel total
 (``src/OscarSearchSgIndex.cpp:178-197``).
 
-Spark shape: one chained DataFrame —
+Spark shape (``token_postings_from_base``): one row per (doc, cell) carrying
+the doc's token-hash array crosses the exchange; an Arrow kernel per
+(cell, token slice) group fans tokens out to sorted doc lists and
+classifies fm locally:
 
-    token_docs (explode text) ⋈ doc_cells → groupBy(token, cell)
-      → n_matched, matched doc array
-      ⋈ cell_totals → is_fm = (n_matched == n_total); doc_ids NULL iff fm
+    index_base (doc_id, toks, cells) → explode cells ⋈ cell totals
+      → applyInArrow per (cell, salt) → (th, cell, is_fm, doc_ids)
+      ⋈ vocab (th → token); xxhash64-colliding tokens via the string tail
 
 The fm bit is the reference's "store 1 bit instead of the item list"
 compression (SURVEY §4): fm rows carry NULL doc_ids and flatten() recovers
@@ -56,43 +59,6 @@ def sorted_list_agg(spark):
         yield
     finally:
         spark.conf.set(_OBJ_HASH_AGG_CONF, old)
-
-
-def token_docs(docs: DataFrame) -> DataFrame:
-    """(token, doc_id) distinct pairs from the document token stream."""
-    return docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("token")
-    )
-
-
-def token_postings(tdocs: DataFrame, dcells: DataFrame, ctotals: DataFrame) -> DataFrame:
-    """→ (token, qt, grid, res, cell_id, is_fm, doc_ids, n_docs).
-
-    ``dcells``: doc_cells at one or more (grid, res); ``ctotals``:
-    cell_totals for the same keys.
-    """
-    # tdocs (token,doc) and dcells (doc,cell) are both distinct, so the join
-    # rows are distinct per (token,grid,res,cell,doc) → collect_list/count
-    # are exact (and scale — see token_postings_from_base)
-    j = tdocs.join(dcells, "doc_id")
-    matched = j.groupBy("token", "grid", "res", "cell_id").agg(
-        F.array_sort(F.collect_list("doc_id")).alias("m_docs"),
-        F.count("*").alias("n_matched"),
-    )
-    out = matched.join(
-        ctotals.select("grid", "res", "cell_id", F.col("n_docs").alias("n_total")),
-        ["grid", "res", "cell_id"],
-    )
-    return out.select(
-        "token",
-        F.lit("exact").alias("qt"),
-        "grid", "res", "cell_id",
-        (F.col("n_matched") == F.col("n_total")).alias("is_fm"),
-        F.when(F.col("n_matched") == F.col("n_total"), F.lit(None)).otherwise(
-            F.col("m_docs")
-        ).alias("doc_ids"),
-        F.col("n_matched").cast("long").alias("n_docs"),
-    )
 
 
 # docs per (cell, salt) group of the Arrow-grouped build: bounds both the
@@ -156,11 +122,10 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
                              grid: str, res: int,
                              n_docs_hint: int | None = None,
                              target_docs: int = TARGET_GROUP_DOCS,
-                             impl: str | None = None,
                              _collide_tokens: list[str] | None = None,
                              vocab: tuple[DataFrame, list[str]] | None = None) -> DataFrame:
-    """Arrow-grouped posting build over doc_index_base (doc_id, toks, cells)
-    — the r05 scaling-gate rewrite (r04 VERDICT item 1).
+    """Arrow-grouped posting build over a doc_index_full frame (reads only
+    doc_id, toks, cells) — the r05 scaling-gate rewrite (r04 VERDICT item 1).
 
     The r04 shape exploded every (token, doc, cell) triple BEFORE the
     exchange and shuffle-sorted ~40 triples per (doc, cell) — the shuffle
@@ -206,13 +171,17 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
                broadcast while the vocab fits; plain shuffle join beyond)
                and union the string-kernel rows of any colliding tokens.
 
+    ``_collide_tokens`` injects a fake colliding set so tests can exercise
+    the routing (real 64-bit collisions are unconstructible).
+
     Exactness: toks/cells are array_distinct per doc, so each (token, doc,
     cell) pair occurs once, lands in exactly one deterministic token slice,
     and per-group counts/lists are exact and complete (row-identical to the
-    string-kernel and JVM builds — pytest A≡B on the forced-salt corpus,
-    forced-collision routing test, and the oracle suite).  Group memory is
-    bounded: a slice carries ~``target_docs``·|toks| token refs, and
-    dropping empty slices bounds group ROWS by the slice's token refs too.
+    string-kernel tail — pytest A≡B on the forced-salt corpus, the
+    forced-collision routing test with every token routed, and the oracle
+    suite).  Group memory is bounded: a slice carries ~``target_docs``·|toks|
+    token refs, and dropping empty slices bounds group ROWS by the slice's
+    token refs too.
     ``n_docs_hint`` ≤ target_docs proves no cell can need salting (a cell
     never exceeds the corpus doc count) and pins the salt factor to 1,
     skipping the slice fan-out entirely.
@@ -222,10 +191,6 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
     shuffle/sort volume falls |toks|-fold, which is also what the N→4N
     gate needs — the 4N level pays netty transfer for shuffle bytes that
     the 1-executor level reads locally.
-
-    ``impl``: 'arrow' (default — hash-keyed Arrow kernel), 'arrow-str'
-    (string-keyed Arrow kernel: no vocab pass / no plan-time action; also
-    the collision-routing path), 'jvm' (no Python workers at all).
 
     ``vocab``: optional pre-computed ``(vh, coll)`` — the (token, th)
     dimension frame and the sorted colliding-token list.  The vocabulary is
@@ -256,45 +221,72 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
                                    spark.sparkContext.defaultParallelism)))
     head = [F.lit("exact").alias("qt"), F.lit(grid).alias("grid"),
             F.lit(res).alias("res")]
-    if impl is None:
-        import os
-        impl = os.environ.get("SPARK_GRAFT_TOKEN_IMPL", "arrow")
-    if impl == "arrow":
-        return _tp_hashed(base, ctb, grid, res, no_salt, n_shuffle, head,
-                          _collide_tokens, vocab)
-    pairs = _salted_pairs(base, ctb, no_salt, n_shuffle, hashed=False)
-    if impl == "jvm":
-        # JVM tail: explode the token array AFTER the (cell_id, _salt)
-        # exchange and aggregate by (cell_id, _salt, token) in Tungsten.
-        # Hash partitioning on a SUBSET of the grouping keys satisfies the
-        # aggregate's ClusteredDistribution, so Catalyst adds NO second
-        # exchange — the |toks|× fan-out exists only inside the post-
-        # shuffle stage, never on the wire (same shuffle bytes as the
-        # Arrow tail), and the whole fan-out → sort-aggregate → parquet
-        # chain is one JVM stage with no Python worker round-trip.
-        # n_total joins the grouping keys (constant per cell — it cannot
-        # split a group) so fm classification stays local and exact.
-        # NOT the default: measured 1M docs / 8-core executor, this tail
-        # runs 3.3x SLOWER than the Arrow kernel (250 s vs 77 s) — the
-        # SortAggregate's binary-row sort over ~10^9 exploded string-keyed
-        # triples is what the kernel's dictionary_encode + int lexsort
-        # avoids.  Kept (tested row-identical) for clusters that cannot
-        # run Python workers on executors.
-        triples = pairs.select(
-            "doc_id", "cell_id", "_salt", "n_total",
-            F.explode("toks").alias("token"))
-        agged = triples.groupBy("cell_id", "_salt", "n_total", "token").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.collect_list("doc_id").alias("_docs"))
-        is_fm = F.col("n_docs") == F.col("n_total")
-        return agged.select(
-            "token", *head, "cell_id", is_fm.alias("is_fm"),
-            F.when(is_fm, F.lit(None)).otherwise(
-                F.array_sort("_docs")).alias("doc_ids"),
-            F.col("n_docs").cast("long").alias("n_docs"))
-    if impl != "arrow-str":
-        raise ValueError(f"unknown token-build impl {impl!r}")
-    return _tp_string_tail(pairs, head)
+    if vocab is not None and _collide_tokens is None:
+        vh, coll = vocab
+    else:
+        vh = (base.select(F.explode("toks").alias("token")).distinct()
+              .select("token", F.xxhash64("token").alias("th")))
+        if _collide_tokens is None:
+            coll_rows = (vh.groupBy("th").agg(F.collect_list("token").alias("ts"))
+                         .where(F.size("ts") > 1).select("ts")
+                         .limit(MAX_COLLIDING_TOKENS + 1).collect())
+            coll = sorted({t for r in coll_rows for t in r.ts})
+        else:
+            coll = sorted(set(_collide_tokens))
+    if len(coll) > MAX_COLLIDING_TOKENS:
+        raise RuntimeError(
+            f"token build: {len(coll)} xxhash64-colliding tokens exceeds "
+            f"MAX_COLLIDING_TOKENS={MAX_COLLIDING_TOKENS} — a 64-bit key "
+            "cannot collide at this rate on real vocabularies")
+    b = base
+    if coll:
+        coll_lit = F.array(*[F.lit(t) for t in coll])
+        b = base.withColumn("toks", F.array_except("toks", coll_lit))
+    hb = b.withColumn("toks", F.transform("toks", lambda t: F.xxhash64(t)))
+    pairs = _salted_pairs(hb, ctb, no_salt, n_shuffle, hashed=True)
+    out_schema = ("th long, cell_id long, doc_ids array<long>, "
+                  "n_docs long, is_fm boolean")
+
+    def build(table):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        toks = table.column("toks").combine_chunks()
+        lens = pc.list_value_length(toks).to_numpy().astype(np.int64)
+        if int(lens.sum()) == 0:
+            return pa.table({
+                "th": pa.array([], pa.int64()),
+                "cell_id": pa.array([], pa.int64()),
+                "doc_ids": pa.array([], pa.list_(pa.int64())),
+                "n_docs": pa.array([], pa.int64()),
+                "is_fm": pa.array([], pa.bool_()),
+            })
+        cell = table.column("cell_id")[0].as_py()
+        n_total = table.column("n_total")[0].as_py()
+        codes = pc.list_flatten(toks).to_numpy()  # int64 hashes, zero-copy
+        drep = np.repeat(table.column("doc_id").to_numpy(), lens)
+        keys, ns, fm, doc_ids = _kernel_tail(codes, drep, n_total)
+        k = len(ns)
+        return pa.table({
+            "th": pa.array(keys, pa.int64()),
+            "cell_id": pa.array(np.full(k, cell, np.int64)),
+            "doc_ids": doc_ids,
+            "n_docs": pa.array(ns, pa.int64()),
+            "is_fm": pa.array(fm),
+        })
+
+    grouped = pairs.groupBy("cell_id", "_salt").applyInArrow(build, out_schema)
+    out = grouped.join(vh, "th").select(
+        "token", *head, "cell_id", "is_fm", "doc_ids",
+        F.col("n_docs").cast("long").alias("n_docs"))
+    if coll:
+        cb = base.withColumn(
+            "toks", F.array_intersect("toks", coll_lit)
+        ).where(F.size("toks") > 0)
+        pairs_c = _salted_pairs(cb, ctb, no_salt, n_shuffle, hashed=False)
+        out = out.unionByName(_tp_string_tail(pairs_c, head))
+    return out
 
 
 def _kernel_tail(codes, drep, n_total, dict_indices: bool = False):
@@ -371,10 +363,9 @@ def _kernel_tail(codes, drep, n_total, dict_indices: bool = False):
 
 def _tp_string_tail(pairs: DataFrame, head: list) -> DataFrame:
     """String-keyed Arrow kernel tail: dictionary_encode (the C++ hash
-    table) assigns int codes, then the shared lexsort tail.  No vocab pass
-    and no plan-time action — this is also the collision-routing path of
-    the hashed build (a colliding token's group is string-keyed, so the
-    two tokens never merge)."""
+    table) assigns int codes, then the shared lexsort tail.  The
+    collision-routing path of the hashed build: a colliding token's group
+    is string-keyed, so the two tokens never merge."""
     out_schema = ("token string, cell_id long, doc_ids array<long>, "
                   "n_docs long, is_fm boolean")
 
@@ -418,83 +409,6 @@ def _tp_string_tail(pairs: DataFrame, head: list) -> DataFrame:
     return grouped.select(
         "token", *head, "cell_id", "is_fm", "doc_ids",
         F.col("n_docs").cast("long").alias("n_docs"))
-
-
-def _tp_hashed(base: DataFrame, ctb: DataFrame, grid: str, res: int,
-               no_salt: bool, n_shuffle: int, head: list,
-               _collide_tokens: list[str] | None,
-               vocab: tuple[DataFrame, list[str]] | None = None) -> DataFrame:
-    """Hash-keyed main path of token_postings_from_base (see its docstring):
-    vocab pass + collision audit, int64 exchange, no-strings kernel,
-    (th → token) restoration join, string-kernel union for colliding
-    tokens.  ``_collide_tokens`` injects a fake colliding set so tests can
-    exercise the routing (real 64-bit collisions are unconstructible)."""
-    if vocab is not None and _collide_tokens is None:
-        vh, coll = vocab
-    else:
-        vh = (base.select(F.explode("toks").alias("token")).distinct()
-              .select("token", F.xxhash64("token").alias("th")))
-        if _collide_tokens is None:
-            coll_rows = (vh.groupBy("th").agg(F.collect_list("token").alias("ts"))
-                         .where(F.size("ts") > 1).select("ts")
-                         .limit(MAX_COLLIDING_TOKENS + 1).collect())
-            coll = sorted({t for r in coll_rows for t in r.ts})
-        else:
-            coll = sorted(set(_collide_tokens))
-    if len(coll) > MAX_COLLIDING_TOKENS:
-        raise RuntimeError(
-            f"token build: {len(coll)} xxhash64-colliding tokens exceeds "
-            f"MAX_COLLIDING_TOKENS={MAX_COLLIDING_TOKENS} — a 64-bit key "
-            "cannot collide at this rate on real vocabularies")
-    b = base
-    if coll:
-        coll_lit = F.array(*[F.lit(t) for t in coll])
-        b = base.withColumn("toks", F.array_except("toks", coll_lit))
-    hb = b.withColumn("toks", F.transform("toks", lambda t: F.xxhash64(t)))
-    pairs = _salted_pairs(hb, ctb, no_salt, n_shuffle, hashed=True)
-    out_schema = ("th long, cell_id long, doc_ids array<long>, "
-                  "n_docs long, is_fm boolean")
-
-    def build(table):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        toks = table.column("toks").combine_chunks()
-        lens = pc.list_value_length(toks).to_numpy().astype(np.int64)
-        if int(lens.sum()) == 0:
-            return pa.table({
-                "th": pa.array([], pa.int64()),
-                "cell_id": pa.array([], pa.int64()),
-                "doc_ids": pa.array([], pa.list_(pa.int64())),
-                "n_docs": pa.array([], pa.int64()),
-                "is_fm": pa.array([], pa.bool_()),
-            })
-        cell = table.column("cell_id")[0].as_py()
-        n_total = table.column("n_total")[0].as_py()
-        codes = pc.list_flatten(toks).to_numpy()  # int64 hashes, zero-copy
-        drep = np.repeat(table.column("doc_id").to_numpy(), lens)
-        keys, ns, fm, doc_ids = _kernel_tail(codes, drep, n_total)
-        k = len(ns)
-        return pa.table({
-            "th": pa.array(keys, pa.int64()),
-            "cell_id": pa.array(np.full(k, cell, np.int64)),
-            "doc_ids": doc_ids,
-            "n_docs": pa.array(ns, pa.int64()),
-            "is_fm": pa.array(fm),
-        })
-
-    grouped = pairs.groupBy("cell_id", "_salt").applyInArrow(build, out_schema)
-    out = grouped.join(vh, "th").select(
-        "token", *head, "cell_id", "is_fm", "doc_ids",
-        F.col("n_docs").cast("long").alias("n_docs"))
-    if coll:
-        cb = base.withColumn(
-            "toks", F.array_intersect("toks", coll_lit)
-        ).where(F.size("toks") > 0)
-        pairs_c = _salted_pairs(cb, ctb, no_salt, n_shuffle, hashed=False)
-        out = out.unionByName(_tp_string_tail(pairs_c, head))
-    return out
 
 
 def match_tokens(all_tokens: list[str], pattern: str, qt: str) -> list[str]:

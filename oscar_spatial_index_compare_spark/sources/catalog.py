@@ -5,18 +5,16 @@ metrics logged per snapshot").
 Reference analog: ``osi-compare-create`` serializes the index to
 ``outdir/index`` + ``outdir/search`` and re-opens them read-only
 (``apps/mainc.cpp:84-125``, ``src/static-htm-index.cpp:202-207``).  Here a
-"serialized index" is a table directory; production target is Iceberg
-(``writeTo(...).createOrReplace()`` — used automatically when a Spark
-catalog is configured); the sandbox fallback is parquet + a JSON snapshot
-log carrying the same information Iceberg snapshots would:
+"serialized index" is a parquet table directory plus a JSON snapshot log:
 
   snapshots.json: [{snapshot_id, table, stage, inputs (lineage),
-                    n_rows, n_files, bytes, partition_columns, wall_sec}]
+                    n_rows, n_files, bytes, wall_sec}]
 
 Resume semantics: ``materialize`` is a no-op returning the stored table when
 a snapshot for (table, fingerprint) already exists — a pipeline re-run after
 a crash skips every completed stage (checkpoint gating).  The fingerprint
 covers the stage name + input lineage, so changed inputs re-materialize.
+Every ``Engine`` builds its index tables through this one path.
 """
 
 from __future__ import annotations
@@ -31,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class Catalog:
-    def __init__(self, spark: SparkSession, root: str, use_iceberg: bool | None = None):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
@@ -40,11 +38,6 @@ class Catalog:
         # driver submits independent table writes in parallel to fill the
         # cluster through stage tails); the log append is read-modify-write
         self._log_lock = threading.Lock()
-        if use_iceberg is None:
-            use_iceberg = bool(
-                spark.conf.get("spark.sql.catalog.osi", None)
-            )
-        self.use_iceberg = use_iceberg
 
     # -- snapshot log --------------------------------------------------------
     def _log(self) -> list[dict]:
@@ -84,10 +77,8 @@ class Catalog:
         table: str,
         stage: str,
         inputs: list[str],
-        partition_by: list[str] | None = None,
         sort_within: list[str] | None = None,
         params: dict | None = None,
-        force: bool = False,
     ) -> DataFrame:
         """Write ``df`` as a snapshot of ``table`` unless an identical
         (stage, lineage, params) snapshot already exists; return the stored
@@ -99,23 +90,13 @@ class Catalog:
         that run eager Spark actions (the token build's vocab/collision
         audit) cost nothing on the checkpoint-gated resume path."""
         fp = self.fingerprint(stage, inputs, params)
-        if not force and self.has(table, fp):
+        if self.has(table, fp):
             return self.read(table)
         t0 = time.perf_counter()
         out = df() if callable(df) else df
         if sort_within:
             out = out.sortWithinPartitions(*sort_within)
-        if self.use_iceberg:
-            w = out.writeTo(f"osi.{table}")
-            if partition_by:
-                from pyspark.sql import functions as F
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()
-        else:
-            writer = out.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(self.path(table))
+        out.write.mode("overwrite").parquet(self.path(table))
         wall = time.perf_counter() - t0
         stored = self.read(table)
         n_rows = stored.count()
@@ -130,14 +111,11 @@ class Catalog:
             "n_rows": n_rows,
             "n_files": n_files,
             "bytes": nbytes,
-            "partition_columns": partition_by or [],
             "wall_sec": round(wall, 3),
         })
         return stored
 
     def read(self, table: str) -> DataFrame:
-        if self.use_iceberg:
-            return self.spark.read.table(f"osi.{table}")
         return self.spark.read.parquet(self.path(table))
 
     def _file_stats(self, table: str) -> tuple[int, int]:
@@ -149,36 +127,3 @@ class Catalog:
                     b += os.path.getsize(os.path.join(dirpath, fn))
         return n, b
 
-
-def build_index_checkpointed(spark: SparkSession, sf_dir: str, root: str,
-                             grid: str = "s2", res: int = 10) -> Catalog:
-    """The E1 build pipeline (documents → mentions → doc_cells →
-    cell_totals → token_postings) as checkpoint-gated snapshots: rerunning
-    after an interruption skips completed stages."""
-    from ..engine import Engine
-    from ..operators.index_build import cell_totals, doc_cells, mention_cells
-    from ..operators.token_index import token_docs, token_postings
-
-    cat = Catalog(spark, root)
-    eng = Engine(spark, sf_dir, cache=False)
-    m = cat.materialize(
-        eng.mentions, "mentions", "extract_mentions", [sf_dir],
-    )
-    mc = cat.materialize(
-        mention_cells(m, grid, res), "mention_cells", "mention_cells",
-        ["mentions"], partition_by=["grid", "res"], sort_within=["cell_id"],
-        params={"grid": grid, "res": res},
-    )
-    dc = doc_cells(mc)
-    ct = cat.materialize(
-        cell_totals(dc), "cell_totals", "cell_totals", ["mention_cells"],
-        partition_by=["grid", "res"], sort_within=["cell_id"],
-        params={"grid": grid, "res": res},
-    )
-    cat.materialize(
-        token_postings(token_docs(eng.docs), dc, ct),
-        "token_postings", "token_postings", ["mention_cells", "cell_totals"],
-        partition_by=["grid", "res"], sort_within=["token", "cell_id"],
-        params={"grid": grid, "res": res},
-    )
-    return cat

@@ -99,7 +99,7 @@ def gazetteer_df(spark):
 def gazetteer_array_col():
     """The gazetteer as ONE literal array<struct<name,glat,glon>> column.
 
-    Backs the row-wise extraction path (operators/index_build.doc_index_base):
+    Backs the row-wise extraction path (operators/index_build.doc_index_full):
     a 200-entry literal lives in the plan itself, so dictionary matching needs
     no join at all — the Spark-side analog of the reference walking its
     in-memory trie per item (``src/OscarSearchSgIndex.cpp:53-102``).

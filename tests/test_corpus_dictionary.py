@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from oscar_spatial_index_compare_spark.operators.index_build import (
     cell_totals_from_base,
-    doc_index_base,
+    doc_index_full,
     mention_cells,
 )
 from oscar_spatial_index_compare_spark.operators.mentions import extract_mentions
@@ -18,7 +18,7 @@ from oscar_spatial_index_compare_spark.plans.planner import Planner, QueryContex
 
 
 def _ctx(spark, docs, tokens):
-    base = doc_index_base(docs, "zxy", 9)
+    base = doc_index_full(docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
     tp = token_postings_from_base(base, ct, "zxy", 9)
     mc = mention_cells(extract_mentions(spark, docs), "zxy", 9)
@@ -74,10 +74,10 @@ def test_salted_groups_exact(spark, engine):
     goes through the partial-merge path) must equal the unsalted build row
     for row — fm classification and lists included."""
     from oscar_spatial_index_compare_spark.operators.index_build import (
-        cell_totals_from_base, doc_index_base,
+        cell_totals_from_base, doc_index_full,
     )
 
-    base = doc_index_base(engine.docs, "zxy", 9)
+    base = doc_index_full(engine.docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
     default = token_postings_from_base(base, ct, "zxy", 9)
     salted = token_postings_from_base(base, ct, "zxy", 9, target_docs=1)
@@ -97,65 +97,49 @@ def test_no_salt_hint_exact(spark):
         "doc_id long, text string",
     )
     from oscar_spatial_index_compare_spark.operators.index_build import (
-        cell_totals_from_base, doc_index_base,
+        cell_totals_from_base, doc_index_full,
     )
 
-    base = doc_index_base(docs, "zxy", 9)
+    base = doc_index_full(docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
     hinted = token_postings_from_base(base, ct, "zxy", 9, n_docs_hint=12)
     default = _tp_rows(token_postings_from_base(base, ct, "zxy", 9))
     assert _tp_rows(hinted) == default
 
 
-def test_jvm_and_arrow_impls_identical(spark, engine):
-    """The three build tails — hash-keyed Arrow kernel (default),
-    string-keyed Arrow kernel, post-exchange JVM explode + SortAggregate —
-    must be row-identical on both the unsalted and the forced-salt
-    (target_docs=1) paths.  The scaling harness picks whichever measures
-    faster; correctness must never depend on the pick."""
-    from oscar_spatial_index_compare_spark.operators.index_build import (
-        cell_totals_from_base, doc_index_base,
-    )
-
-    base = doc_index_base(engine.docs, "zxy", 9)
-    ct = cell_totals_from_base(base, "zxy", 9)
-    for target in (10**9, 1):
-        arrow = _tp_rows(token_postings_from_base(
-            base, ct, "zxy", 9, target_docs=target, impl="arrow"))
-        for other in ("arrow-str", "jvm"):
-            rows = _tp_rows(token_postings_from_base(
-                base, ct, "zxy", 9, target_docs=target, impl=other))
-            assert rows == arrow, other
-        assert any(r[2] for r in arrow)  # fm rows present — not vacuous
-
-
 def test_collision_routing_exact(spark, engine):
     """Inject a fake xxhash64-colliding token set (real 64-bit collisions
     are unconstructible): the routed build — those tokens through the
     string kernel, the rest through the hash kernel, unioned — must be
-    row-identical to the unrouted default, on both salting paths.  Also
-    pins the cap: an absurd colliding set must raise, not silently merge."""
+    row-identical to the unrouted default, on both salting paths.  Routing
+    EVERY corpus token sends the whole build through the string kernel.
+    Also pins the cap: an absurd colliding set must raise, not silently
+    merge."""
     import pytest
 
     from oscar_spatial_index_compare_spark.operators.index_build import (
-        cell_totals_from_base, doc_index_base,
+        cell_totals_from_base, doc_index_full,
     )
     from oscar_spatial_index_compare_spark.operators import token_index as ti
 
-    base = doc_index_base(engine.docs, "zxy", 9)
+    base = doc_index_full(engine.docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
-    # pick two real corpus tokens, one of them gazetteer-hot
-    toks = [r.t for r in base.select(
-        F.explode("toks").alias("t")).distinct().limit(2).collect()]
-    assert len(toks) == 2
-    for target in (10**9, 1):
-        default = _tp_rows(token_postings_from_base(
-            base, ct, "zxy", 9, target_docs=target))
-        routed = _tp_rows(token_postings_from_base(
-            base, ct, "zxy", 9, target_docs=target, _collide_tokens=toks))
-        assert routed == default
-        # the routed tokens genuinely appear in the result (non-vacuous)
-        assert any(r[0] in toks for r in default)
+    # route two real corpus tokens, then every corpus token
+    vocab = [r.t for r in base.select(
+        F.explode("toks").alias("t")).distinct().collect()]
+    assert len(vocab) <= ti.MAX_COLLIDING_TOKENS
+    for toks in (vocab[:2], vocab):
+        assert len(toks) >= 2
+        for target in (10**9, 1):
+            default = _tp_rows(token_postings_from_base(
+                base, ct, "zxy", 9, target_docs=target))
+            routed = _tp_rows(token_postings_from_base(
+                base, ct, "zxy", 9, target_docs=target,
+                _collide_tokens=toks))
+            assert routed == default
+            # the routed tokens genuinely appear in the result (non-vacuous)
+            assert any(r[0] in toks for r in default)
+            assert any(r[2] for r in default)  # fm rows present
     with pytest.raises(RuntimeError, match="colliding"):
         token_postings_from_base(
             base, ct, "zxy", 9,

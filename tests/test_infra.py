@@ -7,31 +7,29 @@ from tests.conftest import SF_DIR
 
 
 def test_catalog_checkpoint_resume(spark, tmp_path):
-    from oscar_spatial_index_compare_spark.sources.catalog import (
-        build_index_checkpointed,
-    )
+    from oscar_spatial_index_compare_spark.engine import Engine
 
     root = str(tmp_path / "cat")
-    cat = build_index_checkpointed(spark, SF_DIR, root, "s2", 10)
-    snaps1 = cat.snapshots()
+    eng1 = Engine(spark, SF_DIR, catalog_root=root)
+    eng1.context("s2", 10)
+    snaps1 = eng1.catalog.snapshots()
     assert {s["table"] for s in snaps1} == {
-        "mentions", "mention_cells", "cell_totals", "token_postings"
+        "index_base_s2_10", "mention_cells_s2_10", "cell_totals_s2_10",
+        "token_postings_s2_10",
     }
     for s in snaps1:
         assert s["n_rows"] > 0 and s["bytes"] > 0 and s["n_files"] > 0
         assert s["inputs"], "lineage missing"
-    # resume: second run creates NO new snapshots (all stages gated)
-    cat2 = build_index_checkpointed(spark, SF_DIR, root, "s2", 10)
-    assert len(cat2.snapshots()) == len(snaps1)
+    # resume: a second Engine on the same root writes NO new snapshot
+    # (every stage is checkpoint-gated)
+    eng2 = Engine(spark, SF_DIR, catalog_root=root)
+    ct = eng2.context("s2", 10).ctotals
+    assert len(eng2.catalog.snapshots()) == len(snaps1)
     # data round-trips
-    ct = cat2.read("cell_totals")
     assert ct.where(F.col("n_docs") <= 0).count() == 0
 
 
 def test_streaming_incremental_matches_batch(spark, engine, tmp_path):
-    from oscar_spatial_index_compare_spark.operators.index_build import (
-        cell_totals, doc_cells, mention_cells,
-    )
     from oscar_spatial_index_compare_spark.streaming.ingest import (
         compact_postings, run_incremental_index,
     )
@@ -46,7 +44,7 @@ def test_streaming_incremental_matches_batch(spark, engine, tmp_path):
     q = run_incremental_index(spark, src, schema, out, ckpt, "s2", 8)
     q.awaitTermination(300)
     streamed = compact_postings(spark, out)
-    batch = cell_totals(doc_cells(mention_cells(engine.mentions, "s2", 8)))
+    batch = engine.context("s2", 8).ctotals
     a = {(r.cell_id, r.n_docs, tuple(r.doc_ids)) for r in streamed.collect()}
     b = {(r.cell_id, r.n_docs, tuple(r.doc_ids)) for r in batch.collect()}
     assert a == b

@@ -24,12 +24,11 @@ def test_pip_forms_bit_identical_on_corpus(spark, engine):
     m = engine.mentions
     checks = []
     for _rid, name, _lvl, poly in REGIONS:
-        checks.append(
-            F.sum(
-                (F.expr(pip_sql("lat", "lon", poly))
-                 != F.expr(pip_hof_sql("lat", "lon", poly))).cast("int")
-            ).alias(name)
-        )
+        # null-safe: a NULL from one form against true/false from the
+        # other counts as a disagreement, not a masked row
+        same = F.expr(pip_sql("lat", "lon", poly)).eqNullSafe(
+            F.expr(pip_hof_sql("lat", "lon", poly)))
+        checks.append(F.sum((~same).cast("int")).alias(name))
     row = m.agg(*checks).collect()[0]
     assert all(v == 0 for v in row), row.asDict()
 
@@ -53,7 +52,8 @@ def test_pip_form_choice_result_identical(spark, engine, monkeypatch):
 
 def test_pop_row_bound_exact(spark, engine):
     """The memoized per-cell row counts sum to the true row count of any
-    cell subset (the bound that gates the interpreted PIP form)."""
+    cell subset (the bound that gates the interpreted PIP form), and to 0
+    when nothing is populated."""
     from oscar_spatial_index_compare_spark.operators import region_query as rq
 
     ctx = engine.context("s2", 10)
@@ -70,6 +70,17 @@ def test_pop_row_bound_exact(spark, engine):
     assert rq._pop_row_bound(key, pop) == probe.count()
     # unknown key -> None (callers then take the codegen form)
     assert rq._pop_row_bound(("nope", 0, 0), subset) is None
+    # a (grid, res) with zero mentions memoizes an EMPTY populated array;
+    # the bound over any covering is then 0 (the planner passes the
+    # unpruned covering boundary)
+    empty_key = ("test-empty-pop", "s2", 10)
+    try:
+        empty_pop = rq.populated_cells(
+            spark.createDataFrame([], "cell_id long"), empty_key)
+        assert empty_pop is not None and len(empty_pop) == 0
+        assert rq._pop_row_bound(empty_key, subset) == 0
+    finally:
+        rq._POP_CACHE.pop(empty_key, None)
 
 
 def test_preloaded_knn_counts_match_self_sufficient_path(spark, tmp_path):
