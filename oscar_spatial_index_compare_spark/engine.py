@@ -27,6 +27,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators import knn, region_query
+from .operators.cell_stats import cell_stats
 from .operators.index_build import (
     cell_totals_from_base,
     doc_index_full,
@@ -228,7 +230,12 @@ class Engine:
         sorted (postings by cell/token → parquet min-max prune leaf
         filters).  A query-side open of a stored catalog runs no build job:
         every materialize below short-circuits on its checkpoint gate
-        without invoking its thunk."""
+        without invoking its thunk.
+
+        Query metadata (``operators.cell_stats``): a fresh create loads the
+        context's per-cell stats and warms the query plan shapes inline
+        (``_warm_query_paths``) before returning; a reopen runs neither —
+        its stats load on first spatial use.  No thread outlives the call."""
         key = (grid, res)
         if key not in self._ctx:
             self._ctx[key] = self._build_context(grid, res)
@@ -238,12 +245,11 @@ class Engine:
         suffix = f"{grid}_{res}"
         params = {"grid": grid, "res": res}
         # fresh build (base not yet stored): overlap the Python runtime
-        # spin-up + vocab collect with the base write.  A query-side open
-        # (base present) must never pay either — the tp materialize below
-        # short-circuits without invoking tp_raw, so the vocab is then
-        # never computed at all.  Same gate materialize() uses — a
-        # stale-fingerprint snapshot (same root, different corpus) must not
-        # suppress the overlap while the base still rebuilds
+        # spin-up + vocab collect with the base write, and warm the query
+        # paths at the end.  A query-side open (base present) pays none of
+        # it — the tp materialize below short-circuits without invoking
+        # tp_raw, so the vocab is never computed.  Same gate materialize()
+        # uses: a stale-fingerprint snapshot must not suppress either
         base_fp = self.catalog.fingerprint("index_base", [self.sf_dir], params)
         fresh = not self.catalog.has(f"index_base_{suffix}", base_fp)
 
@@ -388,102 +394,31 @@ class Engine:
             mcells=mc, ctotals=ct, tpostings=tp,
             tokens=self.corpus_tokens(),
         )
-        self._preload_query_metadata(ctx, base)
+        if fresh:
+            self._warm_query_paths(ctx)
         return ctx
 
-    def _preload_query_metadata(self, ctx: QueryContext,
-                                base: DataFrame) -> None:
-        """The reference's energize()/preload step (SURVEY S7;
-        ``apps/main.cpp:111-121`` mmaps + preloads the cell list at open)
-        for a freshly opened context: a daemon thread
-        collects the populated-cell list + per-cell row counts into the
-        region-query memo and noop-executes a one-row covering-dimension
-        join so its generated stages are janino-compiled — both overlap
-        the remaining build stages / reload counts instead of serializing
-        into the first region query (measured ~0.6 s collect + ~0.8 s
-        first-plan per table).  Best-effort.  ``SPARK_GRAFT_NO_PRELOAD=1``
-        disables it (a token-query-only client opening many contexts may
-        not want speculative metadata jobs contending with its own first
-        queries)."""
-        import os
-        import threading
-
-        if os.environ.get("SPARK_GRAFT_NO_PRELOAD"):
-            return
-
-        def _warm():
-            try:
-                from .operators.region_query import populated_cells
-
-                probe = ctx.mcells.where(
-                    (F.col("grid") == ctx.grid) & (F.col("res") == ctx.res))
-                populated_cells(
-                    probe, (id(ctx.mcells), ctx.grid, ctx.res),
-                    source=ctx.mcells)
-                import numpy as np
-                import pandas as pd
-
-                dim = self.spark.createDataFrame(pd.DataFrame({
-                    "cell_id": pd.array([0], dtype="int64"),
-                    "rid": pd.array([0], dtype="int64"),
-                    "needs_pip": [False],
-                }))
-                j = probe.join(F.broadcast(dim), "cell_id")
-                # warm BOTH gate shapes a real region query compiles: the
-                # no-boundary form and the HOF-PIP CASE form (whose
-                # generated source is polygon-independent, so one dummy
-                # triangle covers every bound-gated polygon — review r06)
-                from .functions.geo import pip_hof_sql
-
-                tri = np.array([[0.0, 0.0], [0.0, 1.0], [1.0, 0.0]])
-                for gate in (
-                    "(NOT needs_pip)",
-                    "(NOT needs_pip) OR (CASE WHEN rid = 0 THEN "
-                    f"({pip_hof_sql('lat', 'lon', tri)}) ELSE false END)",
-                ):
-                    (j.where(F.expr(gate))
-                     .select("doc_id").dropDuplicates(["doc_id"])
-                     .write.format("noop").mode("overwrite").save())
-                # one tiny op-tree query warms the flagship path's stage
-                # shapes (leaf scan + cell join + flatten) the same way;
-                # the result is discarded (the small internal plan-boundary
-                # blocks are reclaimed by the ContextCleaner)
-                if ctx.tokens and len(ctx.tokens) >= 2:
-                    (Planner(ctx).docs(f"{ctx.tokens[0]} / {ctx.tokens[1]}")
-                     .write.format("noop").mode("overwrite").save())
-                # kNN per-cell stats from the STORED aggregates (the
-                # CellInfo-at-open analog): per-cell distinct-doc counts
-                # ARE cell_totals.n_docs, and (M*, D) are one pruned scan
-                # of the stored base's cells column — no re-aggregation of
-                # the mention set (knn._cell_doc_counts re-derives the
-                # same numbers from mcells when this memo is cold; its
-                # exactness vs this path is pinned by
-                # tests/test_pip_forms.py::test_preloaded_knn_counts)
-                from .operators import knn as K
-
-                kkey = (id(ctx.mcells), ctx.grid, ctx.res)
-                if kkey not in K._COUNTS_CACHE:
-                    crows = (ctx.ctotals.select("cell_id", "n_docs")
-                             .limit(K.MAX_DRIVER_COUNT_CELLS + 1)
-                             .collect())
-                    if len(crows) <= K.MAX_DRIVER_COUNT_CELLS:
-                        srow = base.agg(
-                            F.max(F.size("cells")).alias("a"),
-                            F.sum((F.size("cells") > 0).cast("long")
-                                  ).alias("b")).collect()[0]
-                        K.seed_counts(
-                            kkey, ctx.mcells,
-                            {int(r.cell_id): int(r.n_docs) for r in crows},
-                            int(srow.a or 0), int(srow.b or 0))
-                        # with the stats memo warm, knn_docs's own
-                        # stats-overlap thread never fires — warm the
-                        # plan shape here instead
-                        K.warm_plan_shape(self.spark, probe.select(
-                            "doc_id", "lat", "lon", "cell_id"))
-            except Exception:
-                pass  # preload is best-effort; queries pay their own way
-
-        threading.Thread(target=_warm, daemon=True).start()
+    def _warm_query_paths(self, ctx: QueryContext) -> None:
+        """The reference's energize() step (SURVEY S7; ``apps/main.cpp:
+        111-121`` preloads the cell list at open) for a fresh create: load
+        the context's ``cell_stats`` and noop-execute one plan of each query
+        shape — the region gate shapes, one op-tree, the kNN join — so their
+        generated stages are janino-compiled before the first query
+        (measured: the first kNN op took 2.6-2.7 s without the warm-ups vs
+        ~1 s with them).  Runs inline; a failure fails the create."""
+        cell_stats(ctx.mcells, ctx.grid, ctx.res)
+        probe = ctx.mcells.where(
+            (F.col("grid") == ctx.grid) & (F.col("res") == ctx.res))
+        region_query.warm_plan_shapes(self.spark, probe)
+        # one tiny op-tree query warms the flagship path's stage shapes
+        # (leaf scan + cell join + flatten); the result is discarded (the
+        # small internal plan-boundary blocks are reclaimed by the
+        # ContextCleaner)
+        if ctx.tokens and len(ctx.tokens) >= 2:
+            (Planner(ctx).docs(f"{ctx.tokens[0]} / {ctx.tokens[1]}")
+             .write.format("noop").mode("overwrite").save())
+        knn.warm_plan_shape(
+            self.spark, probe.select("doc_id", "lat", "lon", "cell_id"))
 
     def hcqr_context(self, grid: str = "s2", res: int = 10) -> QueryContext:
         """context() + the materialized per-token HCQR payload table — the

@@ -320,26 +320,27 @@ class Planner:
 
     def _region_cqr(self, poly: np.ndarray) -> DataFrame:
         """Polygon leaf → CQR: res-level fm cells inside + pm boundary cells
-        with exact-PIP doc lists (the CQR face of operators/region_query)."""
-        from ..functions.geo import pip_col
+        with exact-PIP doc lists (the CQR face of operators/region_query).
+        The populated cells and the boundary-row bound come from the
+        mention-cells frame's ``cell_stats``, as in region queries."""
+        from ..functions.geo import pip_col, pip_hof_sql
         from ..functions.udfs import parent_col
         from ..grids.base import get_grid
+        from ..operators.cell_stats import cell_stats
         from ..operators.region_query import (
             MAX_BROADCAST_CELLS,
+            PIP_HOF_MAX_ROWS,
             cached_covering,
             cells_df,
             expand_full_to_populated,
-            populated_cells,
         )
 
         ctx = self.ctx
-        g = get_grid(ctx.grid)
         full, boundary = cached_covering(ctx.grid, poly, ctx.res)
         spark = ctx.spark
         parts: list[DataFrame] = []
-        pop = populated_cells(
-            ctx.ctotals, (id(ctx.ctotals), ctx.grid, ctx.res), source=ctx.ctotals
-        )
+        stats = cell_stats(ctx.mcells, ctx.grid, ctx.res)
+        pop = None if stats is None else stats.cells
         fulls = None
         if pop is not None:
             fulls = expand_full_to_populated(ctx.grid, full, pop, ctx.res)
@@ -359,7 +360,7 @@ class Planner:
             else:
                 # distributed fallback: per-level ancestor equi-joins
                 present = ctx.ctotals.select("cell_id")
-                lvls = g.level(full)
+                lvls = get_grid(self.ctx.grid).level(full)
                 for lvl in np.unique(lvls):
                     cells = [(int(c),) for c in full[lvls == lvl]]
                     cdf = F.broadcast(spark.createDataFrame(cells, "fcell long"))
@@ -383,22 +384,14 @@ class Planner:
             ))
             cand = ctx.mcells.join(bdf, F.col("cell_id") == F.col("bcell"))
             # PIP form choice mirrors region_query._batch_dim: when the
-            # memoized mention-cell row counts (populated by any earlier
-            # region query over the same table) bound the boundary rows
-            # below PIP_HOF_MAX_ROWS, the polygon-independent interpreted
-            # form skips the per-polygon codegen; otherwise the unrolled
-            # codegen form that scales.  Bit-identical either way.
-            from ..functions.geo import pip_hof_sql
-            from ..operators.region_query import (
-                PIP_HOF_MAX_ROWS,
-                _pop_row_bound,
-            )
-            bnd_rows = _pop_row_bound(
-                (id(ctx.mcells), ctx.grid, ctx.res),
-                np.asarray(boundary, np.int64))
+            # per-cell mention rows bound the boundary rows below
+            # PIP_HOF_MAX_ROWS, the polygon-independent interpreted form
+            # skips the per-polygon codegen; otherwise the unrolled codegen
+            # form that scales.  Bit-identical either way.
             pip_gate = (
                 F.expr(pip_hof_sql("lat", "lon", poly))
-                if bnd_rows is not None and bnd_rows <= PIP_HOF_MAX_ROWS
+                if stats is not None
+                and stats.row_bound(boundary) <= PIP_HOF_MAX_ROWS
                 else pip_col(F.col("lat"), F.col("lon"), poly))
             pm = (
                 cand.where(pip_gate)

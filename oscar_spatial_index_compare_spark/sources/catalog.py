@@ -13,7 +13,9 @@ Reference analog: ``osi-compare-create`` serializes the index to
 Resume semantics: ``materialize`` is a no-op returning the stored table when
 a snapshot for (table, fingerprint) already exists — a pipeline re-run after
 a crash skips every completed stage (checkpoint gating).  The fingerprint
-covers the stage name + input lineage, so changed inputs re-materialize.
+covers the table format version + stage name + input lineage + params, so
+changed inputs re-materialize, and a root written by code with another
+table format rebuilds instead of being silently reused.
 Every ``Engine`` builds its index tables through this one path.
 """
 
@@ -26,6 +28,11 @@ import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+# version of the stored table formats: bump it whenever a build writes
+# different rows, columns or layout for the same inputs, so every
+# fingerprint changes and existing catalog roots rebuild
+FORMAT_VERSION = 1
 
 
 class Catalog:
@@ -60,7 +67,8 @@ class Catalog:
 
     @staticmethod
     def fingerprint(stage: str, inputs: list[str], params: dict | None = None) -> str:
-        payload = json.dumps({"stage": stage, "inputs": sorted(inputs),
+        payload = json.dumps({"format": FORMAT_VERSION, "stage": stage,
+                              "inputs": sorted(inputs),
                               "params": params or {}}, sort_keys=True)
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 

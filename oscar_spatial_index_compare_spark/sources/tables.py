@@ -47,6 +47,31 @@ def _size_bytes(conf_val: str, default: int) -> int:
         return default
 
 
+def estimated_scan_partitions(spark: SparkSession, sizes: list[int]) -> int:
+    """Partitions Spark plans for a scan of files of ``sizes`` bytes, by its
+    FilePartition rules: each file is charged ``openCostInBytes`` extra,
+    files are cut into maxSplitBytes splits, and splits are packed largest
+    first, next-fit (12 x 1 KB files at 8 cores plan 6 partitions)."""
+    conf = spark.conf
+    mpb = _size_bytes(conf.get("spark.sql.files.maxPartitionBytes",
+                               "134217728b"), 128 << 20)
+    open_cost = _size_bytes(conf.get("spark.sql.files.openCostInBytes",
+                                     "4194304b"), 4 << 20)
+    min_parts = (conf.get("spark.sql.files.minPartitionNum", None)
+                 or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+                 or spark.sparkContext.defaultParallelism)
+    total = sum(sz + open_cost for sz in sizes)
+    split = min(mpb, max(open_cost, total // int(min_parts)))
+    splits = sorted((min(split, sz - off) for sz in sizes
+                     for off in range(0, sz, split)), reverse=True)
+    n_parts, cur = 0, None
+    for ln in splits:
+        if cur is None or cur + ln > split:
+            n_parts, cur = n_parts + 1, 0
+        cur += ln + open_cost
+    return n_parts
+
+
 def ensure_scan_parallelism(df: DataFrame, spark: SparkSession,
                             key: str = "doc_id",
                             input_path: str | None = None) -> DataFrame:
@@ -61,13 +86,11 @@ def ensure_scan_parallelism(df: DataFrame, spark: SparkSession,
     SPARK-38388).
 
     ``input_path``: when the caller knows the file(s) behind ``df``, the
-    split count is ESTIMATED from file sizes with Spark's own formula
-    (maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
-    totalBytes / defaultParallelism))) instead of planning the scan —
+    partition count is ESTIMATED from file sizes with Spark's own rules
+    (``estimated_scan_partitions``) instead of planning the scan —
     ``df.rdd.getNumPartitions()`` forces a full physical plan + RDD
     conversion, measured ~0.5-1 s of serial driver time on a cold session
-    (r06 third pass).  Without a path the exact planned count is used as
-    before."""
+    (r06 third pass).  Without a path the exact planned count is used."""
     n = spark.sparkContext.defaultParallelism
     if input_path is not None:
         import os
@@ -80,15 +103,7 @@ def ensure_scan_parallelism(df: DataFrame, spark: SparkSession,
         elif os.path.exists(input_path):
             sizes = [os.path.getsize(input_path)]
         if sizes:
-            mpb = _size_bytes(
-                spark.conf.get("spark.sql.files.maxPartitionBytes",
-                               "134217728b"), 128 << 20)
-            open_cost = _size_bytes(
-                spark.conf.get("spark.sql.files.openCostInBytes", "4194304b"),
-                4 << 20)
-            split = max(1, min(mpb, max(open_cost, sum(sizes) // max(1, n))))
-            est = sum(-(-sz // split) for sz in sizes)
-            if est >= n:
+            if estimated_scan_partitions(spark, sizes) >= n:
                 return df
             return df.repartition(n, F.col(key))
         # path missing/empty (non-filesystem source): exact check below

@@ -51,76 +51,42 @@ def test_pip_form_choice_result_identical(spark, engine, monkeypatch):
 
 
 def test_pop_row_bound_exact(spark, engine):
-    """The memoized per-cell row counts sum to the true row count of any
-    cell subset (the bound that gates the interpreted PIP form), and to 0
-    when nothing is populated."""
-    from oscar_spatial_index_compare_spark.operators import region_query as rq
+    """The per-cell mention rows of ``cell_stats`` sum to the true row count
+    of any cell subset (the bound that gates the interpreted PIP form), and
+    to 0 when nothing is populated."""
+    from oscar_spatial_index_compare_spark.operators.cell_stats import cell_stats
 
     ctx = engine.context("s2", 10)
     probe = ctx.mcells.where((F.col("grid") == "s2") & (F.col("res") == 10))
-    key = (id(ctx.mcells), "s2", 10)
-    pop = rq.populated_cells(probe, key, source=ctx.mcells)
-    assert pop is not None and len(pop) > 0
+    stats = cell_stats(ctx.mcells, "s2", 10)
+    pop = stats.cells
+    assert len(pop) > 0 and (np.diff(pop) > 0).all()
     subset = pop[:: max(1, len(pop) // 17)]
-    bound = rq._pop_row_bound(key, subset)
     truth = probe.where(
         F.col("cell_id").isin([int(c) for c in subset])).count()
-    assert bound == truth
+    assert stats.row_bound(subset) == truth
     # total over all cells == total probe rows
-    assert rq._pop_row_bound(key, pop) == probe.count()
-    # unknown key -> None (callers then take the codegen form)
-    assert rq._pop_row_bound(("nope", 0, 0), subset) is None
-    # a (grid, res) with zero mentions memoizes an EMPTY populated array;
-    # the bound over any covering is then 0 (the planner passes the
-    # unpruned covering boundary)
-    empty_key = ("test-empty-pop", "s2", 10)
-    try:
-        empty_pop = rq.populated_cells(
-            spark.createDataFrame([], "cell_id long"), empty_key)
-        assert empty_pop is not None and len(empty_pop) == 0
-        assert rq._pop_row_bound(empty_key, subset) == 0
-    finally:
-        rq._POP_CACHE.pop(empty_key, None)
-
-
-def test_preloaded_knn_counts_match_self_sufficient_path(spark, tmp_path):
-    """The context-open preload fills knn's stats memo from the STORED
-    aggregates (cell_totals.n_docs + one base scan); it must equal what
-    knn._cell_doc_counts derives from mention_cells on its own."""
-    import time
-
-    from oscar_spatial_index_compare_spark.engine import Engine
-    from oscar_spatial_index_compare_spark.operators import knn as K
-    from tests.conftest import SF_DIR
-
-    eng = Engine(spark, SF_DIR, catalog_root=str(tmp_path / "cat"))
-    ctx = eng.context("h3", 6)
-    key = (id(ctx.mcells), "h3", 6)
-    for _ in range(120):  # preload runs in a daemon thread — wait for it
-        if key in K._COUNTS_CACHE:
-            break
-        time.sleep(0.25)
-    assert key in K._COUNTS_CACHE, "preload did not populate the knn memo"
-    pre = K._COUNTS_CACHE.pop(key)  # drop it and recompute from mcells
-    probe = ctx.mcells.where(
-        (F.col("grid") == "h3") & (F.col("res") == 6)).select(
-        "doc_id", "lat", "lon", "cell_id")
-    counts, mstar, ndocs = K._cell_doc_counts(probe, ctx.mcells, key)
-    assert pre[1] == counts
-    assert (pre[2], pre[3]) == (mstar, ndocs)
+    assert stats.row_bound(pop) == probe.count()
+    # unpopulated ids add nothing
+    assert stats.row_bound(np.array([-1, -3], np.int64)) == 0
+    # a (grid, res) with zero mentions has EMPTY stats; the bound over any
+    # covering is then 0 (the planner passes the unpruned covering boundary)
+    empty = cell_stats(ctx.mcells, "s2", 11)
+    assert empty is not None and len(empty.cells) == 0
+    assert (empty.mstar, empty.ndocs) == (0, 0)
+    assert empty.row_bound(subset) == 0
 
 
 def test_knn_cell_counts_exact(spark, engine):
-    """count_distinct rewrite of _cell_doc_counts returns exactly the
-    brute-force per-cell distinct doc counts and (M*, D) spread."""
-    from oscar_spatial_index_compare_spark.operators import knn as K
+    """The per-cell distinct docs and (M*, D) spread of ``cell_stats`` equal
+    the brute-force counts over the distinct (cell, doc) pairs."""
+    from oscar_spatial_index_compare_spark.operators.cell_stats import (
+        collect_cell_stats,
+    )
 
     ctx = engine.context("h3", 6)
-    probe = ctx.mcells.where(
-        (F.col("grid") == "h3") & (F.col("res") == 6)).select(
-        "doc_id", "lat", "lon", "cell_id")
-    counts, mstar, ndocs = K._cell_doc_counts(
-        probe, ctx.mcells, (id(ctx.mcells), "h3", 6))
+    probe = ctx.mcells.where((F.col("grid") == "h3") & (F.col("res") == 6))
+    stats = collect_cell_stats(ctx.mcells, "h3", 6)
     pairs = {(r.cell_id, r.doc_id) for r in
              probe.select("cell_id", "doc_id").dropDuplicates().collect()}
     exp_counts: dict[int, int] = {}
@@ -128,6 +94,22 @@ def test_knn_cell_counts_exact(spark, engine):
     for c, d in pairs:
         exp_counts[c] = exp_counts.get(c, 0) + 1
         per_doc[d] = per_doc.get(d, 0) + 1
-    assert counts == exp_counts
-    assert mstar == max(per_doc.values())
-    assert ndocs == len(per_doc)
+    assert dict(zip(stats.cells.tolist(), stats.docs.tolist())) == exp_counts
+    assert stats.mstar == max(per_doc.values())
+    assert stats.ndocs == len(per_doc)
+
+
+@pytest.mark.parametrize("grid,res", [("s2", 10), ("h3", 6)])
+def test_cell_stats_match_cell_totals(spark, engine, grid, res):
+    """The mention-derived populated cells are exactly the stored
+    ``cell_totals`` cells, with the same per-cell distinct docs: the
+    planner's fm pruning reads ``cell_stats`` where it once read
+    ``cell_totals``."""
+    from oscar_spatial_index_compare_spark.operators.cell_stats import cell_stats
+
+    ctx = engine.context(grid, res)
+    stats = cell_stats(ctx.mcells, grid, res)
+    ct = sorted((r.cell_id, r.n_docs)
+                for r in ctx.ctotals.select("cell_id", "n_docs").collect())
+    assert stats.cells.tolist() == [c for c, _n in ct]
+    assert stats.docs.tolist() == [n for _c, n in ct]
